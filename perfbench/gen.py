@@ -14,7 +14,7 @@ values. The program under test sees only the files written here.
   ``lineitem``, nation → region).
 - :class:`IngestStream` — ``documents``/``embeddings`` for the ingest
   batches of ``lake_mix``: a base corpus plus arriving batches that carry a
-  seeded share of perturbed near-duplicates of base documents and
+  ``DUP_SHARE`` of perturbed near-duplicates of base documents and
   vectors.
 """
 
@@ -33,6 +33,11 @@ LETTERS = np.array(list("abcdefghijklmnopqrstuvwxyz"))
 _S_VOCAB, _S_CORPUS = 1, 2
 _S_REGION, _S_CUST, _S_SUPP, _S_PART, _S_ORD, _S_LINE, _S_EVENTS = range(10, 17)
 _S_DOCS, _S_VECS, _S_BATCH = 20, 21, 1000
+
+# mr_wordcount corpus shape: words per line, vocabulary size, Zipf exponent.
+WORDS_PER_LINE, VOCAB, ZIPF_S = 12, 20000, 1.1
+# Share of each arriving ingest batch that is near-duplicates of the base.
+DUP_SHARE = 0.2
 
 
 def rng(seed: int, stream: int) -> np.random.Generator:
@@ -59,15 +64,13 @@ def vocabulary(seed: int, size: int, min_len: int = 2, max_len: int = 9) -> list
 # ---------------------------------------------------------------------------
 
 
-def zipf_corpus(
-    seed: int, lines: int, words_per_line: int = 12, vocab: int = 20000, s: float = 1.1
-) -> bytes:
-    """Newline-terminated text of ``lines`` lines, each ``words_per_line``
-    single-space-separated words drawn with P(rank r) ∝ r^-s."""
-    words = np.array(vocabulary(seed, vocab))
-    p = 1.0 / np.arange(1, vocab + 1) ** s
+def zipf_corpus(seed: int, lines: int) -> bytes:
+    """Newline-terminated text of ``lines`` lines, each ``WORDS_PER_LINE``
+    single-space-separated words drawn with P(rank r) ∝ r^-ZIPF_S."""
+    words = np.array(vocabulary(seed, VOCAB))
+    p = 1.0 / np.arange(1, VOCAB + 1) ** ZIPF_S
     p /= p.sum()
-    draws = rng(seed, _S_CORPUS).choice(vocab, size=(lines, words_per_line), p=p)
+    draws = rng(seed, _S_CORPUS).choice(VOCAB, size=(lines, WORDS_PER_LINE), p=p)
     toks = words[draws]
     return "".join(" ".join(row) + "\n" for row in toks.tolist()).encode()
 
@@ -97,7 +100,7 @@ def _days(base: dt.datetime, offsets: np.ndarray) -> pa.Array:
     return pa.array(stamps.astype("datetime64[us]"), type=pa.timestamp("us"))
 
 
-def tpch_tables(seed: int, sf: float = 0.1) -> dict[str, pa.Table]:
+def tpch_tables(seed: int, sf: float) -> dict[str, pa.Table]:
     """The star schema at scale ``sf`` (sf=0.1: 150k orders, ~600k
     lineitems, 100k events)."""
     n_cust, n_supp, n_part = int(150_000 * sf), max(int(10_000 * sf), 10), int(200_000 * sf)
@@ -234,13 +237,11 @@ class IngestStream:
     """
 
     def __init__(
-        self, seed: int, base_docs: int, base_vecs: int,
-        batch_docs: int, batch_vecs: int, dup_share: float = 0.2,
+        self, seed: int, base_docs: int, base_vecs: int, batch_docs: int, batch_vecs: int
     ) -> None:
         self.seed = seed
         self.base_docs, self.base_vecs = base_docs, base_vecs
         self.batch_docs, self.batch_vecs = batch_docs, batch_vecs
-        self.dup_share = dup_share
         self._words = np.array(vocabulary(seed, 600, 3, 8))
         rv = rng(seed, _S_VECS)
         self._centres = rv.normal(0.0, 1.0, (LABELS, DIM))
@@ -272,7 +273,7 @@ class IngestStream:
         """``(documents, embeddings)`` of arriving batch ``i``; ids
         continue after the base corpus and every earlier batch."""
         r = rng(self.seed, _S_BATCH + i)
-        n_dup = int(round(self.batch_docs * self.dup_share))
+        n_dup = int(round(self.batch_docs * DUP_SHARE))
         docs = self._random_docs(r, self.batch_docs - n_dup)
         for src in r.integers(0, self.base_docs, n_dup):
             toks = self._docs[src].split(" ")
@@ -280,7 +281,7 @@ class IngestStream:
             docs.append(" ".join(toks))
         doc_ids = self.base_docs + i * self.batch_docs + np.arange(self.batch_docs)
 
-        v_dup = int(round(self.batch_vecs * self.dup_share))
+        v_dup = int(round(self.batch_vecs * DUP_SHARE))
         vecs, labels = self._random_vecs(r, self.batch_vecs - v_dup)
         src = r.integers(0, self.base_vecs, v_dup)
         dup_vecs = self._vecs[src] + r.normal(0.0, 0.01, (v_dup, DIM)).astype(np.float32)

@@ -8,10 +8,11 @@ closed loop for ``--seconds`` seconds of measurement, checks every
 output, and prints a table of every metric followed, on the last line,
 by one JSON object ``{"correct", "attempted", "failed", "metrics"}``.
 ``--trace 0`` reports the end-to-end metrics of ``BENCHMARK.json``;
-``--trace 1`` alternates traced and untraced cycles and reports the
-per-layer metrics. Everything the run writes stays under
-``.perfbench_work/`` in the checkout; the spans and the full report of
-each run are kept in ``.perfbench_work/reports/``.
+``--trace 1`` alternates untraced and traced cycles, starting and
+ending with an untraced one, and reports the per-layer metrics.
+Everything the run writes stays under ``.perfbench_work/`` in the
+checkout; the spans and the full report of each run are kept in
+``.perfbench_work/reports/``.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -29,25 +31,61 @@ PACKAGE = "map_reduce_framework_using_python_spark"
 
 #: Input sizes per workload. ``--tiny`` selects the smoke-test sizes.
 SIZES = {
-    "mr_wordcount": {"lines": 20_000, "warmup_lines": 500},
+    "mr_wordcount": {"lines": 100_000},
     "lake_mix": {
         "sf": 0.03,
         "base_docs": 1500, "base_vecs": 600, "batch_docs": 100, "batch_vecs": 40,
     },
 }
 TINY = {
-    "mr_wordcount": {"lines": 300, "warmup_lines": 50},
+    "mr_wordcount": {"lines": 300},
     "lake_mix": {
         "sf": 0.001,
         "base_docs": 120, "base_vecs": 80, "batch_docs": 20, "batch_vecs": 10,
     },
 }
 
+#: Untimed full-size cycles run before the timed loop. Their ops are
+#: checked and counted in ``attempted`` and ``failed``.
+WARMUP_CYCLES = 1
+
+
+def more_cycles(done: int, elapsed: float, seconds: float, trace: bool) -> bool:
+    """Whether the timed loop runs another cycle. An untraced run runs at
+    least one; a traced run (untraced, traced, untraced, …) at least
+    three and ends on an untraced cycle, so every traced cycle has an
+    untraced one on each side."""
+    if trace:
+        return done < 3 or done % 2 == 0 or elapsed < seconds
+    return done < 1 or elapsed < seconds
+
+
+def tracing_overhead(cycle_s: dict[int, float], traced: set[int]) -> float:
+    """Median over traced cycles of its time minus the mean of its two
+    untraced neighbours', so cycle order does not count as overhead."""
+    return statistics.median(
+        cycle_s[c] - (cycle_s[c - 1] + cycle_s[c + 1]) / 2 for c in traced
+    ) if traced else 0.0
+
+
 def process_age() -> float:
     """Seconds since this process started (kernel start time)."""
     with open("/proc/self/stat") as fh:
         start_ticks = int(fh.read().rsplit(")", 1)[1].split()[19])
     return time.clock_gettime(time.CLOCK_BOOTTIME) - start_ticks / os.sysconf("SC_CLK_TCK")
+
+
+def cpu_ticks() -> list[int]:
+    """The aggregate ``cpu`` line of ``/proc/stat``."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
+
+
+def steal_share(before: list[int], after: list[int]) -> float:
+    """Share of CPU time the hypervisor gave to other guests between two
+    :func:`cpu_ticks` readings (field 8, ``steal``)."""
+    d = [b - a for a, b in zip(before, after)]
+    return d[7] / sum(d) if sum(d) else 0.0
 
 
 def vm_hwm_mb(pid: int | str) -> float:
@@ -168,6 +206,21 @@ def _measure(workload, seed, seconds, trace, tiny, cpus, tag, work, reports) -> 
         sizes = (TINY if tiny else SIZES)[workload]
         w = wl.WORKLOADS[workload](wl.Ctx(spark, tracer, work, seed, sizes))
         w.setup()
+
+        def one_cycle(i: int, traced: bool):
+            """Cycle ``i``: its ops and its wall time."""
+            w.before(i)
+            tracer.active = traced
+            t = time.perf_counter()
+            got = w.cycle(i)
+            wall = time.perf_counter() - t
+            tracer.active = False
+            w.after(i, traced)
+            return got, wall
+
+        warm: list = []
+        for i in range(WARMUP_CYCLES):
+            warm.extend(one_cycle(i, False)[0])
         if trace:
             w.instrument()
         setup_s = process_age()
@@ -175,29 +228,26 @@ def _measure(workload, seed, seconds, trace, tiny, cpus, tag, work, reports) -> 
         ops: list = []
         cycle_s: dict[int, float] = {}
         traced: set[int] = set()
-        start, i = time.perf_counter(), 0
-        # Traced runs alternate untraced and traced cycles, so both
-        # medians (and their difference, the tracing overhead) come
-        # from one process; they need at least one cycle of each.
-        while time.perf_counter() - start < seconds or i < (2 if trace else 1):
-            tracer.active = trace and i % 2 == 1
-            if tracer.active:
+        first = WARMUP_CYCLES
+        ticks, start, i = cpu_ticks(), time.perf_counter(), first
+        while more_cycles(i - first, time.perf_counter() - start, seconds, trace):
+            if trace and (i - first) % 2 == 1:
                 traced.add(i)
-            got = w.cycle(i)
-            tracer.active = False
-            cycle_s[i] = sum(o.seconds for o in got)
+            got, cycle_s[i] = one_cycle(i, i in traced)
             ops.extend(got)
             i += 1
+        steal = steal_share(ticks, cpu_ticks())
         tracer.restore()
 
-        w.check(ops)
+        w.check(warm + ops)
         layers = w.layer_metrics(traced) if trace else {}
         extra = w.metrics(ops)
         driver_hwm = vm_hwm_mb("self")
     finally:
         jvm_hwm = stop_session(spark)
 
-    failed = sum(not o.ok for o in ops)
+    attempted = len(warm) + len(ops)
+    failed = sum(not o.ok for o in warm + ops)
     op_times = [o.seconds for o in ops]
     plain = [cycle_s[c] for c in cycle_s if c not in traced]
     e2e = {
@@ -207,9 +257,11 @@ def _measure(workload, seed, seconds, trace, tiny, cpus, tag, work, reports) -> 
     info = {
         "peak_rss_mb": (driver_hwm + jvm_hwm, "MB"),
         "op_s_p50": (wl.median(op_times), "s"),
-        "failed_op_ratio": (failed / len(ops), "ratio"),
+        "failed_op_ratio": (failed / attempted, "ratio"),
+        "warmup_cycles": (WARMUP_CYCLES, "count"),
         "cycles": (len(cycle_s), "count"),
         "ops": (len(ops), "count"),
+        "host_steal": (steal, "ratio"),
         **extra,
     }
     # A tail percentile is reported only with ≥10 samples beyond it.
@@ -222,12 +274,11 @@ def _measure(workload, seed, seconds, trace, tiny, cpus, tag, work, reports) -> 
             c = int(s.op.split(".")[0]) if s.op else None
             if c in accounted:
                 accounted[c] += own
-        traced_p50 = wl.median([cycle_s[c] for c in traced])
         layers.update({
             "session.get_spark_s": session_s,
             "bench.pretouch_s": w.pretouch_s,
-            "trace.cycle_s_p50": traced_p50,
-            "trace.overhead_s": traced_p50 - wl.median(plain),
+            "trace.cycle_s_p50": wl.median([cycle_s[c] for c in traced]),
+            "trace.overhead_s": tracing_overhead(cycle_s, traced),
             "trace.unaccounted_s": wl.median([cycle_s[c] - accounted[c] for c in traced]),
         })
         tracer.dump(os.path.join(reports, f"{tag}.spans.jsonl"))
@@ -235,7 +286,9 @@ def _measure(workload, seed, seconds, trace, tiny, cpus, tag, work, reports) -> 
         "workload": workload, "seed": seed, "seconds": seconds, "trace": trace,
         "cpus": cpus, "session_s": session_s, "pretouch_s": w.pretouch_s,
         "sizes": sizes, "end_to_end": e2e, "workload_metrics": info, "per_layer": layers,
-        "ops": [o.__dict__ for o in ops],
+        "attempted": attempted, "failed": failed, "cycle_s": cycle_s,
+        "traced_cycles": sorted(traced),
+        "warmup_ops": [o.__dict__ for o in warm], "ops": [o.__dict__ for o in ops],
     }
     with open(os.path.join(reports, f"{tag}.json"), "w") as fh:
         json.dump(report, fh, indent=1)
@@ -269,10 +322,9 @@ def main(argv: list[str] | None = None) -> int:
     report = run(args.workload, args.seed, args.seconds, bool(args.trace), args.tiny)
 
     e2e, info, layers = report["end_to_end"], report["workload_metrics"], report["per_layer"]
-    n_ops = len(report["ops"])
-    failed = sum(not o["ok"] for o in report["ops"])
+    attempted, failed = report["attempted"], report["failed"]
     print(f"workload {args.workload}  seed {args.seed}  cpus {report['cpus']}  "
-          f"ops {n_ops}  failed {failed}  correct {failed == 0}")
+          f"ops {attempted}  failed {failed}  correct {failed == 0}")
     for name, (value, unit) in {**e2e, **info}.items():
         print(f"  {name:<28} {value:>14.6g} {unit}")
     units = {m["name"]: m["unit"] for m in spec["per_layer"]}
@@ -285,7 +337,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         metrics = {m["name"]: {"value": e2e[m["name"]][0], "unit": m["unit"]}
                    for m in spec["end_to_end"]}
-    print(json.dumps({"correct": failed == 0, "attempted": n_ops, "failed": failed,
+    print(json.dumps({"correct": failed == 0, "attempted": attempted, "failed": failed,
                       "metrics": metrics}))
     return 0
 

@@ -21,6 +21,7 @@ ROOT = os.path.dirname(BENCH)
 sys.path.insert(0, BENCH)
 
 import gen  # noqa: E402
+from run import more_cycles, tracing_overhead  # noqa: E402
 from spans import Span, covered, self_times  # noqa: E402
 
 with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -76,6 +77,22 @@ def test_self_times_subtract_direct_children_only():
     assert self_times(spans) == [3.0, 2.0, 1.0, 4.0]
     # Self times of a tree add up to the root's duration.
     assert sum(self_times(spans)) == spans[0].dur
+
+
+def test_traced_loop_surrounds_every_traced_cycle():
+    # Cycles alternate untraced (even), traced (odd); the loop stops
+    # only after an untraced cycle and never before three cycles.
+    assert [more_cycles(n, 99.0, 1.0, True) for n in range(6)] == [
+        True, True, True, False, True, False]
+    assert [more_cycles(n, 99.0, 1.0, False) for n in range(3)] == [True, False, False]
+    assert more_cycles(5, 0.5, 1.0, True) and more_cycles(4, 0.5, 1.0, False)
+
+
+def test_tracing_overhead_compares_with_both_neighbours():
+    # A steady drift of −1 s per cycle is not overhead; +0.5 s is.
+    cycle_s = {1: 10.0, 2: 9.5, 3: 8.0, 4: 7.5, 5: 6.0}
+    assert tracing_overhead(cycle_s, {2, 4}) == 0.5
+    assert tracing_overhead(cycle_s, set()) == 0.0
 
 
 def test_metric_names_match_contract():

@@ -20,7 +20,10 @@ into the program's public functions, timed here from outside.
     (writes) interleave with probes (reads).
 
 Correctness checks run outside every timed region; a failed check
-counts the op whose output it checked as failed.
+counts the op whose output it checked as failed. Work that only serves
+the benchmark (writing an arriving batch's input files, keeping outputs
+for the checks, counting files) runs in :meth:`Workload.before` and
+:meth:`Workload.after`, outside the cycle's wall time.
 """
 
 from __future__ import annotations
@@ -125,8 +128,16 @@ class Workload:
     def setup(self) -> None:
         raise NotImplementedError
 
+    def before(self, i: int) -> None:
+        """Untimed: prepare the inputs of cycle ``i``."""
+
     def cycle(self, i: int) -> list[Op]:
+        """Timed: run cycle ``i`` and return its ops."""
         raise NotImplementedError
+
+    def after(self, i: int, traced: bool) -> None:
+        """Untimed: keep what :meth:`check` and the per-layer figures
+        need from cycle ``i``."""
 
     def check(self, ops: list[Op]) -> None:
         """Mark ``ok=False`` on every op whose output is wrong."""
@@ -197,39 +208,31 @@ class MrWordcount(Workload):
         self.corpus_path = os.path.join(w, "corpus.txt")
         with open(self.corpus_path, "wb") as fh:
             fh.write(self.corpus)
-        # Warm-up: one untimed cycle over a small corpus of the same
-        # seed warms JIT, Python workers and code paths. (A full-size
-        # warm-up cycle measured no faster later cycles, and its own
-        # time varied more.)
-        warm = os.path.join(w, "warmup.txt")
-        with open(warm, "wb") as fh:
-            fh.write(gen.zipf_corpus(self.ctx.seed, self.ctx.sizes["warmup_lines"]))
-        self._run_cycle(-1, warm, [])
         self.pretouch_s = pretouch([self.corpus_path])
         self.outputs: dict[int, tuple[str | None, str | None]] = {}
         self.written: dict[int, tuple[int, float]] = {}
 
-    def _run_cycle(self, i: int, path: str, ops: list[Op]) -> tuple[str | None, str | None]:
+    def cycle(self, i: int) -> list[Op]:
         from map_reduce_framework_using_python_spark import cli
 
+        ops: list[Op] = []
+        self.last: tuple[str | None, str | None] = (None, None)
         out_dir = os.path.join(self.ctx.work, f"read{i}")
-        name = self.timed(i, "write", lambda: cli.cmd_write(path, root=self.root), ops)
+        name = self.timed(i, "write", lambda: cli.cmd_write(self.corpus_path, root=self.root), ops)
         if name is None:
-            return None, None
+            return ops
         result = self.timed(
             i, "mapreduce",
             lambda: cli.cmd_mapreduce(self.mapper, self.reducer, name, root=self.root), ops,
         )
         read = self.timed(i, "read", lambda: cli.cmd_read(name, out_dir, root=self.root), ops)
-        return result, read
-
-    def cycle(self, i: int) -> list[Op]:
-        ops: list[Op] = []
-        result, read = self._run_cycle(i, self.corpus_path, ops)
-        if self.tr.active:
-            self._count_written(i)
-        self._snapshot(i, result, read)
+        self.last = (result, read)
         return ops
+
+    def after(self, i: int, traced: bool) -> None:
+        if traced:
+            self._count_written(i)
+        self._snapshot(i, *self.last)
 
     def _count_written(self, i: int) -> None:
         from map_reduce_framework_using_python_spark.catalog import FileCatalog
@@ -332,13 +335,10 @@ class OlapMix(Workload):
         self.sf_dir = os.path.join(w, "tables")
         gen.write_tables(gen.tpch_tables(seed, self.ctx.sizes["sf"]), self.sf_dir)
         self.results: dict[tuple[int, str], tuple[list[str], list[tuple]]] = {}
-        # Warm-up: one untimed pass over the same tables. (A pass over
-        # a small star left the first timed pass ~20 % slow and its
-        # time more variable.)
-        self._pass(-1, [])
         self.pretouch_s = pretouch([self.sf_dir])
 
-    def _pass(self, i: int, ops: list[Op]) -> None:
+    def cycle(self, i: int) -> list[Op]:
+        ops: list[Op] = []
         for q in OLAP_QUERIES:
             def run(q=q):
                 with self.tr.span("plans.build"):
@@ -348,12 +348,8 @@ class OlapMix(Workload):
                 return df.columns, [tuple(r) for r in rows]
 
             out = self.timed(i, q, run, ops)
-            if out is not None and i >= 0:
+            if out is not None:
                 self.results[(i, q)] = out
-
-    def cycle(self, i: int) -> list[Op]:
-        ops: list[Op] = []
-        self._pass(i, ops)
         return ops
 
     def check(self, ops: list[Op]) -> None:
@@ -400,10 +396,10 @@ class OlapMix(Workload):
         }
 
 
-def shingles(text: str, n: int = 3) -> set[str]:
-    """Python twin of ``operators.dedup.word_shingles``."""
+def shingles(text: str) -> set[str]:
+    """Python twin of ``operators.dedup.word_shingles``: word 3-grams."""
     toks = text.split(" ")
-    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
 
 
 def jaccard(a: set[str], b: set[str]) -> float:
@@ -443,23 +439,30 @@ class IngestScreen(Workload):
         t1 = time.perf_counter()
         self.ann_index.build_ivf_index(self.spark.read.parquet(self.vec_dir), self.ivf_path)
         self.build_s = (t1 - t, time.perf_counter() - t1)
-        # Warm-up: the first arriving batch runs untimed (it is still
-        # screened, indexed and checked like every later one).
-        self.seen: dict[int, dict] = {-1: self._batch(-1, [])}
+        self.seen: dict[int, dict] = {}
         self.pretouch_s = pretouch([self.corpus_dir, self.vec_dir, self.mh_path, self.ivf_path])
 
-    def _batch(self, i: int, ops: list[Op]) -> dict:
-        from map_reduce_framework_using_python_spark.sources.io import write_parquet
+    def _paths(self, i: int) -> tuple[str, str]:
+        return (os.path.join(self.root, f"batch{i}_docs.parquet"),
+                os.path.join(self.root, f"batch{i}_vecs.parquet"))
 
-        bdocs, bvecs = self.stream.batch(i + 1)
-        bd_path = os.path.join(self.root, f"batch{i}_docs.parquet")
-        bv_path = os.path.join(self.root, f"batch{i}_vecs.parquet")
+    def before(self, i: int) -> None:
+        """Batch ``i`` arrives: its files are written."""
+        bdocs, bvecs = self.stream.batch(i)
+        bd_path, bv_path = self._paths(i)
         pq.write_table(bdocs, bd_path)
         pq.write_table(bvecs, bv_path)
+        self.seen[i] = {"docs": bdocs, "vecs": bvecs}
+
+    def cycle(self, i: int) -> list[Op]:
+        from map_reduce_framework_using_python_spark.sources.io import write_parquet
+
+        ops: list[Op] = []
+        bd_path, bv_path = self._paths(i)
         spark, tr, dx, ax = self.spark, self.tr, self.dedup_index, self.ann_index
         batch = spark.read.parquet(bd_path)
         queries = spark.read.parquet(bv_path)
-        out: dict = {"docs": bdocs, "vecs": bvecs}
+        out = self.seen[i]
 
         def screen():
             with tr.span("operators.dedup_index.probe_build"):
@@ -490,16 +493,14 @@ class IngestScreen(Workload):
         self.timed(i, "index_append", index_append, ops)
         out["nn"] = self.timed(i, "ann_probe", ann_probe, ops)
         self.timed(i, "ann_append", ann_append, ops)
-        out["cached"] = spark.sparkContext._jsc.getPersistentRDDs().size()
-        return out
-
-    def cycle(self, i: int) -> list[Op]:
-        ops: list[Op] = []
-        self.seen[i] = self._batch(i, ops)
-        if self.tr.active:
-            self.seen[i]["mh_tree"] = tree_stats(self.mh_path)
-            self.seen[i]["ivf_tree"] = tree_stats(self.ivf_path)
         return ops
+
+    def after(self, i: int, traced: bool) -> None:
+        b = self.seen[i]
+        b["cached"] = self.spark.sparkContext._jsc.getPersistentRDDs().size()
+        if traced:
+            b["mh_tree"] = tree_stats(self.mh_path)
+            b["ivf_tree"] = tree_stats(self.ivf_path)
 
     def check(self, ops: list[Op]) -> None:
         """Replays the stream in Python: exact Jaccard for every emitted
@@ -518,7 +519,7 @@ class IngestScreen(Workload):
             ids = b["docs"].column("doc_id").to_pylist()
             texts = b["docs"].column("text").to_pylist()
             b_sh = {d: shingles(t) for d, t in zip(ids, texts)}
-            if b["pairs"] is not None:
+            if b.get("pairs") is not None:
                 truth = set()
                 for d, s in b_sh.items():
                     cands = set().union(*(inverted.get(g, ()) for g in s)) if s else set()
@@ -540,7 +541,7 @@ class IngestScreen(Workload):
                     inverted.setdefault(g, set()).add(d)
             qv = np.stack(b["vecs"].column("embedding").to_numpy(zero_copy_only=False)).astype(np.float64)
             q_ids = b["vecs"].column("vec_id").to_numpy()
-            if b["nn"] is not None:
+            if b.get("nn") is not None:
                 unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
                 qunit = qv / np.linalg.norm(qv, axis=1, keepdims=True)
                 cos = qunit @ unit.T
@@ -625,8 +626,16 @@ class LakeMix(Workload):
             part.setup()
         self.pretouch_s = sum(part.pretouch_s for part in self.parts)
 
+    def before(self, i: int) -> None:
+        for part in self.parts:
+            part.before(i)
+
     def cycle(self, i: int) -> list[Op]:
         return [op for part in self.parts for op in part.cycle(i)]
+
+    def after(self, i: int, traced: bool) -> None:
+        for part in self.parts:
+            part.after(i, traced)
 
     def check(self, ops: list[Op]) -> None:
         for part in self.parts:
