@@ -63,28 +63,19 @@ def cmd_read(name: str, outdir: str, root: str = DEFAULT_ROOT) -> str:
     (reference §3.2 — the push-server/barrier/merge, as one coalesced
     write) IN PART ORDER, so WRITE→READ returns the original file
     byte-identically like the reference's manifest-ordered merge
-    (``client_v1.py:164-176``; r7 review — ``spark.read.text`` packs
-    partitions by file size, not part order). ``sc.union`` preserves
-    per-RDD partition order and ``coalesce(1)`` concatenates parent
-    partitions in index order, so the explicit per-part union IS the
-    ordered merge."""
+    (``client_v1.py:164-176``). ``coalesce(1)`` concatenates the
+    per-part union's partitions in index order; the lines stay JVM
+    strings from scan to sink."""
+    from map_reduce_framework_using_python_spark.sources.io import part_lines
+
     entry = FileCatalog(root).lookup(name)
-    spark = _spark()
-    sc = spark.sparkContext
-    part_files = sorted(
-        os.path.join(entry["path"], f)
-        for f in os.listdir(entry["path"])
-        if f.startswith("part-")
-    )
-    rdd = sc.union([sc.textFile(p) for p in part_files])
-    # explicit schema: toDF would fail to infer on an all-empty file
-    df = spark.createDataFrame(rdd.map(lambda line: (line,)), "value string")
     tmp = os.path.join(outdir, f"_{name}_gather")
-    df.coalesce(1).write.mode("overwrite").text(tmp)
-    os.makedirs(outdir, exist_ok=True)
+    # The RDD text sink refuses an existing directory: clear a gather
+    # dir an interrupted READ left behind.
+    shutil.rmtree(tmp, ignore_errors=True)
+    part_lines(_spark(), entry["path"])._jrdd.coalesce(1).saveAsTextFile(tmp)
     out_path = os.path.join(outdir, name)
-    part = next(p for p in sorted(os.listdir(tmp)) if p.startswith("part-"))
-    shutil.move(os.path.join(tmp, part), out_path)
+    shutil.move(os.path.join(tmp, "part-00000"), out_path)
     shutil.rmtree(tmp, ignore_errors=True)
     return out_path
 
@@ -96,11 +87,12 @@ def cmd_mapreduce(
     store + register the result as ``{name}-part-00000.{ext}``
     (reference §3.3)."""
     entry = FileCatalog(root).lookup(name)
-    with open(mapper_path) as fh:
+    with open(mapper_path, encoding="utf-8") as fh:
         mapper_src = fh.read()
-    with open(reducer_path) as fh:
+    with open(reducer_path, encoding="utf-8") as fh:
         reducer_src = fh.read()
     from map_reduce_framework_using_python_spark.mr.job import MRJob
+    from map_reduce_framework_using_python_spark.sources.io import part_lines
 
     spark = _spark()
     job = MRJob(spark, mapper_src, reducer_src, n_partitions=entry["n_partitions"])
@@ -109,7 +101,7 @@ def cmd_mapreduce(
     catalog = FileCatalog(root)
     dest = catalog.path_for(out_name)
     shutil.rmtree(dest, ignore_errors=True)
-    job.save(spark.read.text(entry["path"]), dest)
+    job.save(part_lines(spark, entry["path"]), dest)
     catalog.register(out_name, entry["n_partitions"])
     return out_name
 

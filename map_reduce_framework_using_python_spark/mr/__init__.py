@@ -7,10 +7,11 @@ run as subprocesses over stdin/stdout (Hadoop-streaming style,
 substring before the first comma (``worker_v1.py:133``) and a
 lexicographic per-partition sort (``worker_v1.py:186-187``) in between.
 
-On Spark this is one lazy RDD chain (SURVEY.md §3.3): ``pipe(mapper) →
-keyBy(first comma field) → repartitionAndSortWithinPartitions →
-pipe(reducer)`` — the master/worker HTTP orchestration, barriers, and
-scratch cleanup (§2.A ops 7-9) are the DAG scheduler's job.
+On Spark this is one lazy JVM chain (SURVEY.md §3.3): ``pipe(mapper) →
+repartition(n, first comma field) → sortWithinPartitions(line) →
+pipe(reducer)``, with rows kept JVM strings throughout — the
+master/worker HTTP orchestration, barriers, and scratch cleanup
+(§2.A ops 7-9) are the DAG scheduler's job.
 """
 
 from map_reduce_framework_using_python_spark.mr.job import MRJob, mr_keyby

@@ -1,26 +1,39 @@
-"""MRJob: Hadoop-streaming-style mapper/reducer jobs on Spark RDDs.
+"""MRJob: Hadoop-streaming-style mapper/reducer jobs with JVM-resident rows.
 
 Capability port of the reference's MAP-REDUCE lifecycle (SURVEY.md §3.3,
 ``Master/masterhandler.py:59-191``) with bit-compatible Lane-A semantics:
 
 - mapper/reducer are *source strings* shipped to workers — the reference
   POSTs the source and pipes partition bytes through a subprocess
-  (``Worker/worker_v1.py:100-122,177-218``); we write them to a job dir,
-  register via ``SparkContext.addFile``, and use ``RDD.pipe``.
+  (``Worker/worker_v1.py:100-122,177-218``); we write them to the
+  process's job dir, register via ``SparkContext.addFile``, and run them
+  with the JVM ``JavaRDD.pipe``.
+- rows stay JVM strings from scan to sink: the mapper reads its input
+  partitions as they are (one task per stored part via
+  ``sources.io.part_lines``), the shuffle and sort run in Tungsten, and
+  the reducer's output is written by the JVM text sink. Python runs only
+  inside the user's mapper and reducer processes. Pipes are UTF-8 on
+  both sides (explicit JVM encoding, ``PYTHONIOENCODING=utf-8``); the
+  JVM splits pipe output on ``\n``, ``\r\n`` and a bare ``\r``, so a
+  bare ``\r`` inside mapper output ends a line, as it already does in
+  WRITE's text scan.
 - shuffle key = substring before the first comma
-  (``Worker/worker_v1.py:133``); same key ⇒ same partition. We hash with
-  PySpark's ``portable_hash`` — the reference's ``myHash``
-  (``Worker/shuffler.py:6-10``) skews badly (SURVEY.md §4) and only its
-  *semantics* (same key → same bucket) are part of the contract.
+  (``Worker/worker_v1.py:133``); same key ⇒ same partition. Keys are
+  routed with Spark's murmur3 hash (``repartition(n, key)``) — the
+  reference's ``myHash`` (``Worker/shuffler.py:6-10``) skews badly
+  (SURVEY.md §4) and only its *semantics* (same key → same bucket) are
+  part of the contract.
 - pre-reduce sort is lexicographic on the RAW LINE
-  (``Worker/worker_v1.py:186-187``): ``"10" < "9"``. We sort the line
-  string itself, not a typed key.
+  (``Worker/worker_v1.py:186-187``): ``"10" < "9"``. Spark sorts the
+  line's UTF-8 bytes, which is the same order as Python's code-point
+  sort.
 - partition count is explicit (the reference pins it to worker count,
   ``Master/masterhandler.py:24``; here it's just a parameter) and empty
   partitions are preserved (the WRITE padding invariant,
   ``Client/client_v1.py:102-109``).
 - a failing mapper/reducer fails the job (the reference's HTTP-500
-  abort contract, ``Worker/worker_v1.py:201-207``) via ``checkCode``.
+  abort contract, ``Worker/worker_v1.py:201-207``): the JVM pipe raises
+  ``Subprocess exited with status N``.
 
 At 100 TB this lane still scales — Spark's sort-based shuffle spills,
 unlike the reference's in-memory string buffers
@@ -31,13 +44,39 @@ surface.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 import uuid
 
-from pyspark.rdd import RDD, portable_hash
+from pyspark.rdd import RDD
+from pyspark.serializers import UTF8Deserializer
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from map_reduce_framework_using_python_spark.sources.io import jvm_lines, lines_frame
+
+#: Environment and buffer of every mapper/reducer pipe. The JVM side's
+#: encoding is passed explicitly too: JDK 17's default charset follows
+#: the locale.
+PIPE_ENV = {"PYTHONIOENCODING": "utf-8"}
+PIPE_BUFFER = 1 << 16
+
+_job_dir: str | None = None
+
+
+def job_dir() -> str:
+    """The process's one directory for shipped mapper/reducer sources,
+    made on first use. It must outlive lazy job execution (local mode
+    pipes the absolute path), so it is reclaimed at interpreter exit by
+    a single hook rather than per job."""
+    global _job_dir
+    if _job_dir is None:
+        _job_dir = tempfile.mkdtemp(prefix="mrjob_")
+        atexit.register(shutil.rmtree, _job_dir, ignore_errors=True)
+    return _job_dir
 
 
 def mr_keyby(line: str) -> str:
@@ -63,15 +102,7 @@ class MRJob:
     ) -> None:
         self.spark = spark
         self.n_partitions = n_partitions
-        self._job_dir = tempfile.mkdtemp(prefix="mrjob_")
-        # The dir must outlive lazy job execution (local mode pipes the
-        # absolute path), so it is reclaimed at interpreter exit rather
-        # than per-job — a long-lived driver running many jobs no
-        # longer leaks one dir per job forever (r7 review).
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, self._job_dir, ignore_errors=True)
+        self._job_dir = job_dir()
         # Unique basenames per job: SparkContext.addFile dedups/conflicts
         # on basename, and one session runs many jobs (the reference
         # reuses ``mapper.py`` per job dir, ``worker_v1.py:105-108``, but
@@ -85,12 +116,12 @@ class MRJob:
         analog of the master POSTing source code to workers
         (``Master/masterhandler.py:83-92,139-143``)."""
         path = os.path.join(self._job_dir, name)
-        with open(path, "w") as fh:
+        with open(path, "w", encoding="utf-8") as fh:
             fh.write(src)
         self.spark.sparkContext.addFile(path)
         return path
 
-    def _cmd(self, name: str) -> str:
+    def _cmd(self, name: str) -> list[str]:
         # local[N]: executors share the driver filesystem → absolute job
         # dir path. Cluster deploys pipe the bare addFile name, which
         # resolves from the task working dir on YARN/Kubernetes (both
@@ -98,50 +129,56 @@ class MRJob:
         # STANDALONE does not localize into the CWD — there, ship the
         # sources via --files or resolve through SparkFiles in a
         # bootstrap; documented limitation, not silently wrong (the
-        # pipe fails loudly with checkCode=True).
+        # pipe fails loudly on a non-zero exit).
         if self.spark.sparkContext.master.startswith("local"):
-            return f"{sys.executable} {os.path.join(self._job_dir, name)}"
-        return f"python3 {name}"
+            return [sys.executable, os.path.join(self._job_dir, name)]
+        return ["python3", name]
+
+    def _pipe(self, jrdd, name: str):
+        return jrdd.pipe(self._cmd(name), PIPE_ENV, False, PIPE_BUFFER, "UTF-8")
+
+    def _jvm_input(self, lines: RDD | DataFrame):
+        """The input as a JVM string RDD: a DataFrame's first column, a
+        JVM-backed RDD as is, a pickled RDD's ``str`` forms converted
+        once."""
+        if isinstance(lines, DataFrame):
+            return jvm_lines(lines)
+        if isinstance(lines._jrdd_deserializer, UTF8Deserializer):
+            return lines._jrdd
+        return lines.map(str)._to_java_object_rdd()
+
+    def _jvm_run(self, lines: RDD | DataFrame):
+        """Full pipeline as a JVM ``JavaRDD[String]``: map → shuffle(first
+        comma field) → sort(raw line, lexicographic) → reduce."""
+        mapped = self._pipe(self._jvm_input(lines), f"mapper_{self._uid}.py")
+        shuffled = (
+            lines_frame(self.spark, mapped, lazy=True)
+            .repartition(self.n_partitions, F.substring_index("value", ",", 1))
+            .sortWithinPartitions("value")
+        )
+        return self._pipe(jvm_lines(shuffled), f"reducer_{self._uid}.py")
 
     def run(self, lines: RDD | DataFrame) -> RDD:
-        """Full pipeline: map → shuffle(first comma field) →
-        sort(raw line, lexicographic) → reduce. Returns an RDD of output
-        lines."""
-        rdd = lines.rdd.map(lambda row: row[0]) if isinstance(lines, DataFrame) else lines
-        if rdd.getNumPartitions() != self.n_partitions:
-            # WRITE semantics: exactly n partitions, padded when short
-            # (client_v1.py:102-115).
-            rdd = rdd.repartition(self.n_partitions)
-        mapped = rdd.pipe(self._cmd(f"mapper_{self._uid}.py"), checkCode=True)
-        shuffled = (
-            mapped.map(lambda line: (line, None))
-            .repartitionAndSortWithinPartitions(
-                numPartitions=self.n_partitions,
-                partitionFunc=lambda line: portable_hash(mr_keyby(line)),
-                ascending=True,
-                keyfunc=lambda line: line,
-            )
-            .keys()
-        )
-        return shuffled.pipe(self._cmd(f"reducer_{self._uid}.py"), checkCode=True)
+        """Full pipeline; returns an RDD of output lines with one
+        partition per reducer."""
+        return RDD(self._jvm_run(lines), self.spark.sparkContext, UTF8Deserializer())
 
     def run_to_kv_df(self, lines: RDD | DataFrame, key_name: str = "key", value_name: str = "value") -> DataFrame:
         """Run and split output on the first comma into a typed 2-column
         DataFrame (the reference's untyped ``(key, value)`` contract:
         the FIRST comma field is the key, so keys must not contain
-        commas — values may)."""
-        out = self.run(lines).map(
-            lambda line: tuple(line.split(",", 1)) if "," in line else (line, None)
+        commas — values may; a line with no comma has a null value)."""
+        value = F.col("value")
+        return lines_frame(self.spark, self._jvm_run(lines)).select(
+            F.substring_index(value, ",", 1).alias(key_name),
+            F.when(value.contains(","), F.substr(value, F.instr(value, ",") + 1)).alias(value_name),
         )
-        # Explicit schema: inference would fail if every value is None
-        # (reducer output with no comma on any line).
-        return out.toDF(f"{key_name} string, {value_name} string")
 
     def save(self, lines: RDD | DataFrame, path: str) -> None:
         """Write results as ``part-*`` text files — the reference's
         ``{name}-part-00000_{i}`` convention (``Worker/worker_v1.py:193``)
         is Spark's native output naming."""
-        self.run(lines).saveAsTextFile(path)
+        self._jvm_run(lines).saveAsTextFile(path)
 
 
 #: Canonical word-count job — the reference's smoke test

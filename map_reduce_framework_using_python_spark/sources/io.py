@@ -8,8 +8,13 @@ Reference parity (SURVEY.md §2.A ops 1-2):
   reference's ``{name}-part-00000_{i}`` convention
   (``Worker/worker_v1.py:193``) natively.
 - READ (``Client/client_v1.py:144-176``: gather all partitions, merge in
-  manifest order) → :func:`read_text`; single-file gather is
+  manifest order) → :func:`part_lines` (one task per stored part, in
+  part order) or :func:`read_text`; single-file gather is
   ``coalesce(1)`` at write time, never a driver-side collect.
+
+The MapReduce lane keeps lines JVM strings from scan to sink: the
+helpers under *JVM-resident lines* bridge PySpark objects and JVM
+``JavaRDD[String]`` without a Python worker touching a row.
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; ``maxPartitionBytes`` (session.py) sizes scan splits
@@ -21,6 +26,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.rdd import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -240,6 +246,86 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+# --------------------------------------------------------------------------
+# JVM-resident lines. WRITE, READ and MRJob move lines as JVM strings
+# from scan to sink; Python runs only inside user mapper/reducer
+# processes. These helpers are the bridges between PySpark objects and
+# JVM ``JavaRDD[String]``s.
+# --------------------------------------------------------------------------
+
+
+def _encoders(spark: SparkSession):
+    """``org.apache.spark.sql.Encoders`` of the session's JVM."""
+    return spark._jvm.org.apache.spark.sql.Encoders
+
+
+def _lazy_jsession(spark: SparkSession):
+    """A sibling JVM session with AQE off, for plans that end in an RDD.
+
+    With AQE on, turning a Dataset with a shuffle into an RDD
+    (``Dataset.javaRDD``) runs the shuffle's map stage right away, so
+    merely building the RDD launches a job. Without AQE the RDD stays
+    lazy and the map stage runs in the job that consumes it. The
+    sibling shares the SparkContext; one is made per session."""
+    jsession = getattr(spark, "_lazy_jsession", None)
+    if jsession is None:
+        jsession = spark._jsparkSession.newSession()
+        jsession.conf().set("spark.sql.adaptive.enabled", "false")
+        spark._lazy_jsession = jsession
+    return jsession
+
+
+def jvm_lines(df: DataFrame):
+    """The first column of ``df`` as a JVM ``JavaRDD[String]``."""
+    first = df.select(F.col(df.columns[0]).cast("string"))
+    return getattr(first._jdf, "as")(_encoders(df.sparkSession).STRING()).javaRDD()
+
+
+def lines_frame(spark: SparkSession, jrdd, lazy: bool = False) -> DataFrame:
+    """A JVM ``JavaRDD[String]`` as ``DataFrame[value: string]``.
+
+    ``lazy`` builds it in the AQE-off sibling session, so a shuffle
+    planned on it can be turned back into an RDD by :func:`jvm_lines`
+    without running a job."""
+    jsession = _lazy_jsession(spark) if lazy else spark._jsparkSession
+    return DataFrame(jsession.createDataset(jrdd.rdd(), _encoders(spark).STRING()).toDF(), spark)
+
+
+def part_lines(spark: SparkSession, path: str) -> RDD:
+    """A stored file's lines in part order, one task per ``part-*`` file.
+
+    ``sc.union`` keeps each RDD's partitions in order, so concatenating
+    the partitions IS the reference's manifest-ordered merge
+    (``client_v1.py:164-176``); ``spark.read.text`` would pack parts by
+    size instead. The RDD holds JVM strings (``UTF8Deserializer``)."""
+    sc = spark.sparkContext
+    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    return sc.union([sc.textFile(os.path.join(path, p), 1) for p in parts])
+
+
+def contiguous_lines(df: DataFrame, n_partitions: int):
+    """``df``'s first column as a JVM ``JavaRDD[String]`` of
+    ``n_partitions`` contiguous runs: partition i holds lines
+    [i·per, (i+1)·per) in order, per = ceil(n / n_partitions), and the
+    partitions past the last line are empty. Counts the lines (one job)
+    to size the runs; the rest is lazy."""
+    import math
+
+    spark = df.sparkSession
+    lines = jvm_lines(df)
+    per = max(1, math.ceil(lines.count() / n_partitions))
+    enc = _encoders(spark)
+    indexed = _lazy_jsession(spark).createDataset(
+        lines.zipWithIndex().rdd(), enc.tuple(enc.STRING(), enc.LONG())
+    )
+    return jvm_lines(
+        DataFrame(indexed.toDF(), spark)
+        .toDF("value", "idx")
+        .repartitionById(n_partitions, F.expr(f"cast(idx div {per} as int)"))
+        .sortWithinPartitions("idx")
+    )
+
+
 def read_text(spark: SparkSession, path: str, n_partitions: int | None = None) -> DataFrame:
     """Reference READ (op 2): line-delimited text → DataFrame[value: string].
 
@@ -271,10 +357,10 @@ def write_text(
     The explicit-``n_partitions`` split is CONTIGUOUS in line order —
     part i holds lines [i·ceil(n/N), …), exactly the reference's
     ``split.bylinecount`` layout (``client_v1.py:103-115``) — so a
-    WRITE→READ roundtrip returns the file byte-identically (r7 review:
-    the old ``repartition`` round-robin silently permuted lines, which
-    the reference never does). Costs one extra count job per write, as
-    the reference's client also pays (it counts lines to size parts).
+    WRITE→READ roundtrip returns the file byte-identically. Every step
+    runs in the JVM (:func:`contiguous_lines`, then the RDD text sink).
+    Costs one extra count job per write, as the reference's client also
+    pays (it counts lines to size parts).
     Only ``mode='overwrite'`` is supported on this branch — the RDD
     text sink has no append/ignore semantics, so anything else raises
     instead of crashing mid-write or silently overwriting."""
@@ -288,22 +374,10 @@ def write_text(
                 f"(got {mode!r}): the partitioned RDD text sink cannot "
                 "append or ignore"
             )
-        import math
         import shutil
 
         shutil.rmtree(path, ignore_errors=True)
-        rdd = df.rdd.map(lambda row: row[0])
-        n = rdd.count()
-        per = max(1, math.ceil(n / n_partitions))
-        (
-            rdd.zipWithIndex()
-            .map(lambda t: ((t[1] // per, t[1]), t[0]))
-            .repartitionAndSortWithinPartitions(
-                numPartitions=n_partitions, partitionFunc=lambda k: k[0]
-            )
-            .map(lambda t: t[1])
-            .saveAsTextFile(path)
-        )
+        contiguous_lines(df, n_partitions).saveAsTextFile(path)
         return
     df.write.mode(mode).text(path)
 
